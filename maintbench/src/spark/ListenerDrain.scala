@@ -1,0 +1,9 @@
+package org.apache.spark.maintbench
+
+import org.apache.spark.SparkContext
+
+/** Blocks until every event posted so far has reached every listener.
+ * `LiveListenerBus.waitUntilEmpty` is `private[spark]`, hence this package. */
+object ListenerDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+}
